@@ -25,6 +25,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 RESULTS = os.path.join(HERE, "results")
@@ -32,6 +33,7 @@ ALL = ("sparql_olap", "fixpoint", "pipeline", "endpoint_rw")
 
 
 def run(workload, seed, seconds, trace):
+    t0 = time.time()
     with tempfile.NamedTemporaryFile(suffix=".json", dir=os.path.join(os.getcwd(), ".bench_build")) as rec:
         cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload, "--seed", str(seed),
                "--seconds", str(seconds), "--trace", str(trace), "--record", rec.name]
@@ -41,7 +43,8 @@ def run(workload, seed, seconds, trace):
             record = json.load(fh)
     record["result"] = {k: last[k] for k in ("correct", "attempted", "failed")}
     record["exit_code"] = p.returncode
-    print(f"{workload} seed {seed} trace {trace}: exit {p.returncode}, "
+    record["wall_s"] = round(time.time() - t0, 1)
+    print(f"{workload} seed {seed} trace {trace}: exit {p.returncode}, wall {record['wall_s']} s, "
           f"{json.dumps({k: round(v, 4) for k, v in record['end_to_end'].items()})}", file=sys.stderr)
     return record
 
@@ -52,7 +55,7 @@ def traced(args):
         tr = run(w, args.seed, args.seconds, 1)
         out = {
             "workload": w, "seed": args.seed, "seconds": args.seconds,
-            "result": plain["result"], "sizes": plain["sizes"],
+            "result": plain["result"], "sizes": plain["sizes"], "wall_s": plain["wall_s"],
             "end_to_end": plain["end_to_end"], "end_to_end_note": plain["note"],
             "traced_end_to_end": tr["end_to_end"],
             "tracing_overhead": {k: round(tr["end_to_end"][k] / v - 1, 4)

@@ -64,29 +64,33 @@ object EndpointWorkload {
     val acked: mutable.Map[String, Option[String]] = mutable.Map.empty // item -> value while live
 
     private var sent = 0
-    private var inserts = 0
     private var order: Seq[Int] = Nil
 
-    /** Requests come in cycles of five: the four SELECT templates in a
-      * seeded order, then one update. */
+    /** Requests come in cycles of ten: six SELECTs, an INSERT DATA, two
+      * SELECTs, a DELETE WHERE. Both clients' inserts and deletes multiply
+      * the update lineage weight to 64, the default at which `UpdateExec`
+      * cuts the lineage, so most SELECTs run on a freshly cut store and the
+      * ones between an insert and the cut on a grown lineage. */
     def next(): (String, String, Boolean) = {
       sent += 1
-      if (sent % 5 == 0) update() else select()
+      sent % 10 match {
+        case 7 => insert()
+        case 0 => delete()
+        case _ => select()
+      }
     }
 
-    /** INSERT DATA and DELETE WHERE alternate (a delete needs a live item).
-      * Two inserts and two deletes multiply the update lineage weight to 64,
-      * the default at which `UpdateExec` cuts the lineage. */
-    def update(): (String, String, Boolean) = {
-      inserts += 1
-      if (live.nonEmpty && inserts % 2 == 0) {
-        val item = live.toSeq(r.nextInt(live.size))
-        ("delete", s"DELETE WHERE { <$item> <$Mark> ?o }", true)
-      } else {
-        nextItem += 1
-        val item = s"urn:bench:c$client/i$nextItem"
-        ("insert", s"""INSERT DATA { <$item> <$Mark> "v$nextItem" . <$item> <${Voc}reviewFor> <${pick()}> }""", true)
-      }
+    def insert(): (String, String, Boolean) = {
+      nextItem += 1
+      val item = s"urn:bench:c$client/i$nextItem"
+      ("insert", s"""INSERT DATA { <$item> <$Mark> "v$nextItem" . <$item> <${Voc}reviewFor> <${pick()}> }""", true)
+    }
+
+    /** Deletes one of this client's live items (there is one: inserts come
+      * first in every cycle). */
+    def delete(): (String, String, Boolean) = {
+      val item = live.toSeq(r.nextInt(live.size))
+      ("delete", s"DELETE WHERE { <$item> <$Mark> ?o }", true)
     }
 
     def select(): (String, String, Boolean) = {
@@ -210,7 +214,8 @@ object EndpointWorkload {
     val nq = generate(ctx)
     ctx.mark("generated")
     var rep = 0
-    val st = ctx.repeatSetup[Setup](3, s => { s.server.stop(); Main.deleteTree(s.dir) }) {
+    // five set-ups: each takes about half a second, so the median needs more
+    val st = ctx.repeatSetup[Setup](5, s => { s.server.stop(); Main.deleteTree(s.dir) }) {
       rep += 1; setup(ctx, nq, rep)
     }
     val base = QuadStore.load(spark, s"${st.dir}/log/base").quads
@@ -227,10 +232,11 @@ object EndpointWorkload {
     val streams = (0 until nClients).map(i => new Stream(ctx.seed, i, products))
     val clients = (0 until nClients).map(_ => new Client(port))
     // warm, from a separate stream and checked like the rest: each SELECT
-    // template once, then four updates, which end in a lineage cut, so
-    // that measuring starts from a freshly cut store
+    // template once, then insert, delete, insert, delete, which ends in a
+    // lineage cut, so that measuring starts from a freshly cut store
     val warm = new Stream(ctx.seed, 99, products)
-    (Iterator.fill(4)(warm.select()) ++ Iterator.fill(4)(warm.update())).foreach { req =>
+    (Iterator.fill(4)(warm.select()) ++
+      Iterator(() => warm.insert(), () => warm.delete(), () => warm.insert(), () => warm.delete()).map(_())).foreach { req =>
       val r = request(ctx, clients.head, warm, req, 99, 0)
       ctx.extraAttempted += 1
       if (!r.ok) ctx.extraFailed += 1
@@ -238,10 +244,9 @@ object EndpointWorkload {
     val logBefore = Main.du(s"${st.dir}/log/log")
     ctx.tracer.resetHeapPeak()
     ctx.measureStartNs = System.nanoTime()
-    val cycles = Main.passCount(ctx, 10, 1)
-    // whole double cycles (ten requests, two of them updates) per client:
-    // both clients' four updates end each double cycle in a lineage cut, so
-    // every run sees the same mix of freshly cut and grown lineage
+    val cycles = Main.passCount(ctx, 5, 2)
+    // whole cycles (ten requests, two of them updates) per client, so every
+    // run sees the same mix of freshly cut and grown lineage
     val threads = (0 until nClients).map { i =>
       new Thread(() => {
         for (cycle <- 1 to cycles; _ <- 1 to 10)

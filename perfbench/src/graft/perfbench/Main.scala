@@ -129,7 +129,17 @@ object Main {
       ctx.tracer.drain()
       Files.write(Paths.get(out), ctx.toJson(workload).getBytes("UTF-8"))
       ctx.mark("done")
-    } finally spark.stop()
+      System.err.flush()
+    } catch {
+      case e: Throwable =>
+        e.printStackTrace()
+        System.err.flush()
+        Runtime.getRuntime.halt(1)
+    }
+    // everything is written: halting skips the ~4 s SparkContext.stop takes
+    // (its temporary directories live in the work directory, which the
+    // caller deletes)
+    Runtime.getRuntime.halt(0)
   }
 
   // ------------------------------------------------------------ op running
