@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** One measured operation: a query, an operator call, a pipeline stage or
-  * an HTTP request. `ok` turns false on an exception, a non-2xx response
+  * an HTTP request. `ok` is false after an exception, a non-2xx response
   * or an output mismatch. */
 final case class OpRecord(name: String, kind: String, pass: Int, client: Int,
                           startNs: Long, durNs: Long, ok: Boolean)
@@ -23,8 +23,8 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
   var clients = 1
   var measureStartNs = 0L
   var measureEndNs = 0L
-  /** Output checks made outside any operation (end-of-run visibility,
-    * reopen): each counts as an attempted operation. */
+  /** Attempts outside the measured operations (warm-up operations and the
+    * end-of-run visibility checks); each counts as attempted. */
   var extraAttempted = 0
   var extraFailed = 0
 
