@@ -1677,13 +1677,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       .select(col("g"), col("n").as("src"), col("n").as("tgt"))
   }
 
-  /**
-   * Transitive closure — distributed semi-naïve iteration replacing the
-   * reference's single-partition blocking KleenePlusClosureExec
-   * (lib/physical/src/paths/kleene_plus/physical.rs:166-290). Each round is a
-   * distributed hash join; localCheckpoint cuts lineage so plans stay flat.
-   * Scales with cluster size where the reference is single-node here.
-   */
   /** Seed nodes (g, n) for a bound-endpoint closure walk. */
   private def seedDF(scoped: DataFrame, t: RdfTerm): DataFrame =
     scoped.select(col("graph").as("g"), col("subject").as("n"))
@@ -1840,10 +1833,37 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     if (sys.props.get("graft.closure.debug").contains("true"))
       System.err.println(f"[closure] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
 
+  /**
+   * Transitive closure of `edges` (g, src, tgt), per graph; with `seeds`
+   * (g, n) only the pairs whose src is a seed. The reference computes it
+   * with a single-partition blocking KleenePlusClosureExec
+   * (lib/physical/src/paths/kleene_plus/physical.rs:166-290). Two paths,
+   * chosen by the [[graft.ops.LocalGraph]] byte gate on the deduplicated
+   * edges:
+   *
+   *  - below the gate the edges are collected into a driver-side CSR
+   *    adjacency over interned (graph, node) ids and broadcast; one
+   *    `mapPartitions` stage runs a depth-first walk per source (every
+   *    node, or the seeds) and emits term rows. A handful of jobs in all,
+   *    where the loop below pays a few per round;
+   *  - above it, distributed semi-naïve iteration over dictionary-encoded
+   *    long ids: each round is a distributed hash join, localCheckpoint
+   *    cuts lineage so plans stay flat, and the work scales with the
+   *    cluster.
+   *
+   * Either way the result is checkpointed, in the edges' schema.
+   */
   private def closureCompute(edges0: DataFrame, seeds: Option[DataFrame]): DataFrame = {
     val tE = System.nanoTime()
     val edges = edges0.dropDuplicates().localCheckpoint()
+    val eCnt = edges.count()
     dbg("edges materialize", tE)
+    if (graft.ops.LocalGraph.fits(eCnt, edges.schema)) {
+      val tL = System.nanoTime()
+      val out = localClosure(edges, seeds)
+      dbg("local path", tL)
+      return out
+    }
     // The iteration below shuffles its working relation every round; on RDF
     // terms that is three 5-field structs per row. (graph, node) pairs are
     // dictionary-encoded to ONE long up front (ids are per-graph, so the
@@ -1860,12 +1880,12 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       .localCheckpoint()
     // the dictionary is node-count-bounded (≤ 2·|edges| entries, usually far
     // fewer) while the pair relation it translates grows toward |closure| —
-    // broadcast it when it provably fits so the encode/decode joins never
-    // shuffle the big side (guide §3.1); above the gate, shuffled-hash
-    val dictBcastRows =
-      sys.props.get("graft.closure.dictBroadcastRows").map(_.toLong).getOrElse(2000000L)
+    // broadcast it when its estimated bytes pass the local gate, so the
+    // encode/decode joins never shuffle the big side (guide §3.1); above
+    // the gate, shuffled-hash
     val dict =
-      if (dict0.count() <= dictBcastRows) broadcast(dict0) else dict0.hint("shuffle_hash")
+      if (graft.ops.LocalGraph.fits(dict0.count(), dict0.schema)) broadcast(dict0)
+      else dict0.hint("shuffle_hash")
     val sDict = dict.select(col("g").as("__sg"), col("n").as("__sn"), col("__id").as("__sid"))
     val tDict = dict.select(col("g").as("__tg"), col("n").as("__tn"), col("__id").as("__tid"))
     val eL = edges
@@ -1939,7 +1959,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         // dense seed set: the walk would touch most of the graph anyway, and
         // linear rounds pay fixed job overhead per hop — log-round full
         // doubling restricted back to the seeds is strictly fewer rounds
-        val eCnt = eL.count()
         val aCnt = all.count()
         if (aCnt * 8 >= eCnt)
           return closure(edges, None)
@@ -2000,9 +2019,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         // anti join protects already-stored, strictly smaller values).
         // Termination is new-empty: if any pair beyond 2^k existed, its
         // 2^k-prefix would be an exact-2^k pair in the current delta.
-        val tC = System.nanoTime()
-        var size = eL.count()
-        dbg(s"initial count=$size", tC)
         // hub keys come from the BASE edges, detected once: re-detecting on
         // the evolving reachability relation costs O(|all|) extra per round
         // (measured 2× on a 16M-pair closure) for marginal coverage — the
@@ -2011,13 +2027,13 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         // frontier rows, which is ordinary input skew AQE does split
         lazy val eHeavy = {
           val tH = System.nanoTime()
-          val h = heavyIds(eL, size)
+          val h = heavyIds(eL, eCnt)
           dbg("heavyKeys", tH)
           h
         }
         var all = eL.withColumn("d", lit(1L))
         var delta = all
-        var deltaCnt = size
+        var deltaCnt = eCnt
         var span = 1L
         while (deltaCnt > 0) {
           val tR = System.nanoTime()
@@ -2039,6 +2055,38 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         }
         decode(all).localCheckpoint()
     }
+  }
+
+  /** The closure below the gate: a depth-first walk from every source over
+    * the broadcast adjacency of interned (g, n) ids, so same-graph paths
+    * need no extra check. Emits (g, src, tgt) term rows in `edges`'
+    * schema, checkpointed like the distributed result. */
+  private def localClosure(edges: DataFrame, seeds: Option[DataFrame]): DataFrame = {
+    val graph = graft.ops.LocalGraph.build(
+      edges.collect().map(r => ((r.get(0), r.get(1)), (r.get(0), r.get(2)))))
+    // seeds are one (g, n) row per graph holding the bound term
+    val sources = seeds match {
+      case Some(sd) =>
+        sd.select(col("g"), col("n")).collect().flatMap(r => graph.id((r.get(0), r.get(1)))).distinct
+      case None => Array.range(0, graph.size)
+    }
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(graph)
+    val rows = sc.parallelize(sources.toSeq,
+        math.max(1, math.min(sources.length, sc.defaultParallelism)))
+      .mapPartitions { it =>
+        val g = bc.value
+        val walk = g.walker()
+        it.flatMap { s =>
+          val (gr, src) = g.keys(s)
+          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+          walk.reach(s)(t => out += Row(gr, src, g.keys(t)._2))
+          out
+        }
+      }
+    val result = spark.createDataFrame(rows, edges.schema).localCheckpoint()
+    bc.destroy()
+    result
   }
 
   // ===================================================================== query

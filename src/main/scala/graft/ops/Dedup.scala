@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -431,23 +431,22 @@ object Dedup {
    * The result labels every node with the MINIMUM id reachable from it
    * (a deterministic canonical representative).
    *
-   * Adaptive small-graph path: the symmetrised edge relation is already
-   * materialised (checkpoint) before the loop, so its size is known; when it
-   * fits comfortably on the driver (≤ `localThreshold` edges, long/int ids)
-   * the components come from a driver-side union-find instead of 2-3 cluster
-   * rounds — the same adaptivity Spark itself applies when it broadcasts a
-   * small join side, with an identical result by construction. Pair graphs
-   * ARE usually small relative to the corpus (only near-dups create edges);
-   * web-scale edge sets take the distributed loop.
+   * Small-graph path: the symmetrised edge relation is already materialised
+   * (checkpoint) before the loop, so its row count is known; when its
+   * estimated bytes pass the [[LocalGraph]] gate (long/int ids) the
+   * components come from a driver-side walk over the interned adjacency
+   * instead of 2-3 cluster rounds, with an identical result by
+   * construction. Pair graphs ARE usually small relative to the corpus
+   * (only near-dups create edges); web-scale edge sets take the
+   * distributed loop.
    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          localThreshold: Long = 1L << 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
     val edges = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .dropDuplicates().localCheckpoint()
     val integral = edges.schema.fields.forall(f =>
       f.dataType == LongType || f.dataType == IntegerType)
-    if (integral && edges.count() <= localThreshold) return localComponents(edges)
+    if (integral && LocalGraph.fits(edges.count(), edges.schema)) return localComponents(edges)
     var labels = edges.select(col("u").as("id")).dropDuplicates()
       .withColumn("comp", col("id")).localCheckpoint()
     var changed = 1L
@@ -474,26 +473,21 @@ object Dedup {
     labels
   }
 
-  /** Driver union-find over a collected (symmetric) edge set; canonical
-    * label = min id per component — identical to the distributed loop. */
+  /** Components of a collected (symmetric) edge set: each node not yet
+    * labelled takes the walk from it as its component; canonical label =
+    * min id per component — identical to the distributed loop. */
   private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val es = edges.collect().map(r => (asLong(r.get(0)), asLong(r.get(1))))
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
+    val g = LocalGraph.build(edges.collect().map(r => (asLong(r.get(0)), asLong(r.get(1)))))
+    val comp = new Array[Long](g.size)
+    val done = new Array[Boolean](g.size)
+    val walk = g.walker()
+    for (v <- 0 until g.size if !done(v)) {
+      val members = scala.collection.mutable.ArrayBuffer(v)
+      walk.reach(v)(members += _)
+      val label = members.iterator.map(g.keys(_)).min
+      members.foreach { m => comp(m) = label; done(m) = true }
     }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
-    val out = nodes.map(v => org.apache.spark.sql.Row(v, find(v)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1),
+    LocalGraph.toDF(edges.sparkSession, g.keys.indices.map(v => Row(g.keys(v), comp(v))),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("comp", LongType, nullable = false))))
   }

@@ -9,14 +9,17 @@ import org.apache.spark.sql.types._
  * link-based quality signal (CommonCrawl-derived corpora rank hosts/pages
  * this way before sampling), plus degree statistics.
  *
- * Distribution posture: edges are the only large relation; every iteration
- * is one equi-join of edges against the (node, rank) relation keyed by
- * src, one groupBy(dst) aggregation, and one left join back onto the node
- * list — all key-partitioned shuffles AQE can split, no driver-side
- * materialisation of anything wider than a scalar. The rank relation is
- * `localCheckpoint`ed per iteration so the logical plan stays constant in
- * the iteration count (the k-means lesson: an unrolled lineage doubles the
- * plan per round and Catalyst optimize time explodes).
+ * Distribution posture: edges are the only large relation. When the
+ * deduplicated edges (plus an explicit node list) pass the [[LocalGraph]]
+ * byte gate, they are collected and the power iteration runs on the driver
+ * over the interned adjacency — no Spark job per iteration. Above the gate
+ * every iteration is one equi-join of edges against the (node, rank)
+ * relation keyed by src, one groupBy(dst) aggregation, and one left join
+ * back onto the node list — all key-partitioned shuffles AQE can split, no
+ * driver-side materialisation of anything wider than a scalar. There the
+ * rank relation is `localCheckpoint`ed per iteration so the logical plan
+ * stays constant in the iteration count (the k-means lesson: an unrolled
+ * lineage doubles the plan per round and Catalyst optimize time explodes).
  */
 object LinkGraph {
 
@@ -49,10 +52,15 @@ object LinkGraph {
     val e = edges.select(col(srcCol).cast(LongType).as("src"),
       col(dstCol).cast(LongType).as("dst")).dropDuplicates("src", "dst")
       .localCheckpoint(eager = false)
-    val n = nodes.map(_.select(col(nodes.get.columns.head).cast(LongType).as("id")).dropDuplicates())
-      .getOrElse(e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).dropDuplicates())
-      .localCheckpoint(eager = false)
-    val nCount = n.count().toDouble
+    val given = nodes.map(ns => ns.select(col(ns.columns.head).cast(LongType).as("id"))
+      .dropDuplicates().localCheckpoint(eager = false))
+    val givenCount = given.map(_.count())
+    if (LocalGraph.fitsBytes(LocalGraph.estimatedBytes(e.count(), e.schema) +
+        givenCount.fold(0L)(LocalGraph.estimatedBytes(_, given.get.schema))))
+      return localPageRank(e, given, iters, damping)
+    val n = given.getOrElse(e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+      .dropDuplicates().localCheckpoint(eager = false))
+    val nCount = givenCount.getOrElse(n.count()).toDouble
     require(nCount > 0, "pageRank over an empty vertex set")
     // out-degree AFTER parallel-edge collapse; broadcast-joined nowhere —
     // it is corpus-sized, so it rides the same keyed shuffles as edges
@@ -85,6 +93,41 @@ object LinkGraph {
         .localCheckpoint() // k rows per executor partition; constant plan size
     }
     ranks.select(col("id"), round(col("rank"), 9).as("rank"))
+  }
+
+  /** [[pageRank]] on the driver over collected (src, dst) edges and node
+    * ids. Matches the distributed loop's SQL semantics exactly: the nodes
+    * are `n` (or every endpoint), an edge counts towards its source's
+    * out-degree even when its target is not a node, and a null id joins
+    * nothing — it is dangling and receives no contributions. */
+  private def localPageRank(e: DataFrame, n: Option[DataFrame], iters: Int,
+                            damping: Double): DataFrame = {
+    def id(r: org.apache.spark.sql.Row): java.lang.Long = r.get(0).asInstanceOf[java.lang.Long]
+    val preset = n.map(_.collect().toSeq.map(id)).getOrElse(Nil)
+    val g = LocalGraph.build(e.collect().map(r => (id(r), r.get(1).asInstanceOf[java.lang.Long])), preset)
+    // nodes are ids 0 until nn
+    val nn = if (n.isDefined) preset.length else g.size
+    require(nn > 0, "pageRank over an empty vertex set")
+    // Spark's round(): HALF_UP on the double's decimal form
+    def rnd(x: Double, scale: Int) = BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val teleport = (1.0 - damping) / nn
+    var rank = Array.fill(nn)(1.0 / nn)
+    for (_ <- 1 to iters) {
+      var dangling = 0.0
+      val c = new Array[Double](nn)
+      for (u <- 0 until nn) {
+        val deg = g.outDegree(u)
+        if (deg == 0 || g.keys(u) == null) dangling += rank(u)
+        else for (i <- g.offsets(u) until g.offsets(u + 1)) {
+          val w = g.targets(i)
+          if (w < nn && g.keys(w) != null) c(w) += rank(u) / deg
+        }
+      }
+      rank = Array.tabulate(nn)(v => rnd(teleport + damping * (c(v) + dangling / nn), 12))
+    }
+    LocalGraph.toDF(e.sparkSession,
+      (0 until nn).map(v => org.apache.spark.sql.Row(g.keys(v), rnd(rank(v), 9))),
+      StructType(Seq(StructField("id", LongType), StructField("rank", DoubleType))))
   }
 
   /** In/out degree + dangling flag per node — the cheap structural report. */

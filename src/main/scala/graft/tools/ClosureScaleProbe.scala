@@ -7,12 +7,15 @@ import graft.encoding.TermCols
 /**
  * Closure at a DATA-BOUND scale (the sf0.1 gate closure is 750k pairs —
  * pure scheduling overhead, so core counts and algorithm changes are
- * invisible there). Synthesises N_CHAINS disjoint chains of length CHAIN_LEN
+ * invisible there). Synthesises N_CHAINS disjoint chains of CHAIN_LEN nodes
  * (deterministic), runs `?a <urn:next>+ ?b` through the engine, and reports
- * the closure wall time. Closure size = N_CHAINS · C(CHAIN_LEN+1, 2).
+ * the closure wall time. Edges = N_CHAINS · (CHAIN_LEN − 1), closure size =
+ * N_CHAINS · C(CHAIN_LEN, 2). Above about 117k edges the input exceeds the
+ * [[graft.ops.LocalGraph]] gate and the closure runs distributed;
+ * `-Dgraft.closure.debug=true` prints which path ran and each round.
  *
  * Run: SPARK_GRAFT_CPUS=32 graftrun.sh graft.tools.ClosureScaleProbe [chains] [len]
- * Defaults 100k × 30 → 3.0M edges, 46.5M reachability pairs.
+ * Defaults 100k × 30 → 2.9M edges, 43.5M reachability pairs.
  */
 object ClosureScaleProbe {
   def main(args: Array[String]): Unit = {

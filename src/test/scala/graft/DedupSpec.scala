@@ -108,11 +108,13 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents handles long paths (pointer jumping converges)") {
     import spark.implicits._
-    // one path 0-1-2-...-40: worst case for plain propagation; threshold 0
-    // forces the DISTRIBUTED loop (the small-graph union-find is covered by
+    // one path 0-1-2-...-40: worst case for plain propagation; gate 0
+    // forces the DISTRIBUTED loop (the small-graph local path is covered by
     // the differential test below, which runs both paths)
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, "id_a", "id_b", localThreshold = 0).collect()
+    val cc = withProps(graft.ops.LocalGraph.MaxBytesProp -> "0") {
+      Dedup.connectedComponents(pairs, "id_a", "id_b").collect()
+    }
     assert(cc.length == 41 && cc.forall(_.getLong(1) == 0L))
   }
 
@@ -123,8 +125,7 @@ class DedupSpec extends SparkSpec {
       .filter(e => e._1 != e._2).toDF("id_a", "id_b").localCheckpoint()
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m(Dedup.connectedComponents(es, "id_a", "id_b", localThreshold = 0)) ==
-           m(Dedup.connectedComponents(es, "id_a", "id_b")))
+    onBothPaths(m(Dedup.connectedComponents(es, "id_a", "id_b")))
   }
 
   test("connectedComponents matches driver union-find on a random graph") {

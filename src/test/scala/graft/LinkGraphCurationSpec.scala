@@ -31,32 +31,44 @@ class LinkGraphCurationSpec extends SparkSpec {
       k -> BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble }
   }
 
+  /** PageRank as (id → rank), on the local and the distributed path,
+    * which must agree to within 1e-9. */
+  private def ranks(pr: => org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    onBothPaths(pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+      (a: Map[Long, Double], b: Map[Long, Double]) =>
+        a.keySet == b.keySet && a.forall { case (k, v) => math.abs(v - b(k)) <= 1e-9 })
+
   private val nodes = (0L to 6L).toSeq
   // 5 has no out-edges (dangling); 6 is isolated; 2->2 self-loop; 0->1 twice
   private val edges = Seq((0L, 1L), (0L, 1L), (0L, 2L), (1L, 2L), (2L, 2L),
     (3L, 0L), (3L, 4L), (4L, 5L))
 
   test("pageRank matches the reference formulation (dangling + isolated + self-loop + parallel edges)") {
-    val got = LinkGraph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-        iters = 5, damping = 0.85, nodes = Some(nodes.toDF("id")))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = ranks(LinkGraph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+        iters = 5, damping = 0.85, nodes = Some(nodes.toDF("id"))))
     val want = refPageRank(nodes, edges, 5, 0.85)
     assert(got == want)
   }
 
   test("pageRank mass sums to ~1 and isolated nodes get teleport + dangling share") {
-    val got = LinkGraph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-        iters = 5, nodes = Some(nodes.toDF("id")))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = ranks(LinkGraph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+        iters = 5, nodes = Some(nodes.toDF("id"))))
     assert(math.abs(got.values.sum - 1.0) < 1e-6)
     assert(got(6L) > (1 - 0.85) / 7.0) // more than bare teleport
   }
 
   test("pageRank without explicit nodes uses endpoint union") {
-    val got = LinkGraph.pageRank(Seq((1L, 2L), (2L, 1L)).toDF("s", "d"), "s", "d", iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = ranks(LinkGraph.pageRank(Seq((1L, 2L), (2L, 1L)).toDF("s", "d"), "s", "d", iters = 3))
     assert(got.keySet == Set(1L, 2L))
     assert(math.abs(got(1L) - got(2L)) < 1e-12) // symmetric 2-cycle
+  }
+
+  test("pageRank over a node list that omits an endpoint: edges to it still count in the out-degree") {
+    // 4 is no node: 3's mass split towards it leaks, and 3 is not dangling
+    val got = ranks(LinkGraph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+        iters = 5, nodes = Some(Seq(0L, 1L, 2L, 3L).toDF("id"))))
+    assert(got.keySet == Set(0L, 1L, 2L, 3L))
+    assert(got.values.sum < 1.0 - 1e-3)
   }
 
   test("degrees reports in/out/dangling with parallel edges collapsed") {

@@ -12,7 +12,8 @@ import graft.sources.Turtle
  * (ALP) semantics for the closures, zero-length paths matching every graph
  * node. Complements the curated fixtures with unbiased nesting (closure of
  * a sequence, reversed negated sets, alternatives under `+`…). `p?` is left
- * to the curated tests (its cardinality rules are pinned there). Seeds
+ * to the curated tests (its cardinality rules are pinned there). Every
+ * case runs on both the local and the distributed closure path. Seeds
  * fixed — reproducible.
  */
 class RandomPathDifferentialSpec extends SparkSpec {
@@ -101,12 +102,12 @@ class RandomPathDifferentialSpec extends SparkSpec {
     }
     val q = s"SELECT ${sel.map("?" + _).mkString(" ")} WHERE { $pat }"
 
-    val got = Graft(quads).select(q).collect().toSeq.map { r =>
+    val got = onBothPaths(Graft(quads).select(q).collect().toSeq.map { r =>
       sel.map { v =>
         val i = r.fieldIndex(v)
         if (r.isNullAt(i)) "∅" else r.getStruct(i).getString(1)
       }.mkString(" ")
-    }.sorted
+    }.sorted)
 
     val pairs = evalP(triples, path)
     val expect = (shape match {
@@ -141,12 +142,12 @@ class RandomPathDifferentialSpec extends SparkSpec {
     val path = randomPath(rnd, preds, depth = 2, closureBudget = 1)
     val q = s"SELECT ?g ?x ?y WHERE { GRAPH ?g { ?x ${render(path)} ?y } }"
 
-    val got = Graft(quads).select(q).collect().toSeq.map { r =>
+    val got = onBothPaths(Graft(quads).select(q).collect().toSeq.map { r =>
       Seq("g", "x", "y").map { v =>
         val i = r.fieldIndex(v)
         if (r.isNullAt(i)) "∅" else r.getStruct(i).getString(1)
       }.mkString(" ")
-    }.sorted
+    }.sorted)
 
     val expect = graphs.flatMap { g =>
       val t = quadList.collect { case (gg, s, p, o) if gg == g => (s, p, o) }

@@ -10,16 +10,6 @@ import graft.ops.{Dedup, Similarity, SkewSalt}
   * result bags on corpora engineered to trip the hot-bucket/hub paths. */
 class SkewSaltSpec extends SparkSpec {
 
-  private def withProps[T](props: (String, String)*)(f: => T): T = {
-    val old = props.map { case (k, _) => k -> sys.props.get(k) }
-    props.foreach { case (k, v) => sys.props(k) = v }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => sys.props(k) = v
-      case (k, None) => sys.props.remove(k)
-    }
-  }
-
   test("selfJoinSides ≡ plain self-join on random buckets (incl. hot ones)") {
     import spark.implicits._
     // bucket sizes 1 (dropped-as-pairless), 2, 7, 40 (hot at threshold 8)
@@ -132,10 +122,13 @@ class SkewSaltSpec extends SparkSpec {
     val expected = chainLen * (chainLen + 1) / 2 + hubDeg + hubDeg + hubDeg * hubDeg
     def count(ns: String): Long = lex(Graft(quadsDF(ns))
       .select("SELECT (COUNT(?a) AS ?n) WHERE { ?a <urn:e>+ ?b }"), "n").head.toLong
-    val plain = count("c")
+    // both runs take the distributed closure (gate 0): below the gate the
+    // closure never reaches the salted step join
+    val plain = withProps(graft.ops.LocalGraph.MaxBytesProp -> "0") { count("c") }
     // force the salted path: every relation is "large", hub is "heavy"
-    val salted = withProps("graft.salt.hotBucket" -> "16",
-      "graft.salt.factor" -> "5", "graft.salt.minRows" -> "10") { count("d") }
+    val salted = withProps(graft.ops.LocalGraph.MaxBytesProp -> "0",
+      "graft.salt.hotBucket" -> "16", "graft.salt.factor" -> "5",
+      "graft.salt.minRows" -> "10") { count("d") }
     assert(plain == expected)
     assert(salted == expected, s"salted=$salted expected=$expected")
   }

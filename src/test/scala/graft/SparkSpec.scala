@@ -15,6 +15,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def rows(df: DataFrame, cols: String*): Set[Seq[String]] =
     df.select(cols.map(c => org.apache.spark.sql.functions.col(s"$c.v")): _*)
       .collect().map(_.toSeq.map(x => if (x == null) "∅" else x.toString)).toSet
+
+  /** Runs `f` with the given system properties set, restoring them after. */
+  def withProps[T](props: (String, String)*)(f: => T): T = {
+    val old = props.map { case (k, _) => k -> sys.props.get(k) }
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => sys.props(k) = v
+      case (k, None) => sys.props.remove(k)
+    }
+  }
+
+  /** Runs `f` twice: at the default [[graft.ops.LocalGraph]] gate, where
+    * small graphs take the local path, and with the gate at 0, where every
+    * size-gated operator takes its distributed path. Memoised closures and
+    * indexes are cleared before each run. Asserts the two results agree
+    * and returns the local one. */
+  def onBothPaths[T](f: => T, agree: (T, T) => Boolean = (a: T, b: T) => a == b): T = {
+    graft.ops.IndexCache.clearAll()
+    val local = f
+    val distributed = withProps(graft.ops.LocalGraph.MaxBytesProp -> "0") {
+      graft.ops.IndexCache.clearAll()
+      f
+    }
+    assert(agree(local, distributed), s"local path: $local\ndistributed path: $distributed")
+    local
+  }
 }
 
 object SparkSpec {
